@@ -69,7 +69,6 @@ def main() -> None:
             docs,
             out_dir,
             input_id=f"corpus@{n_files}",
-            bucket_groups=1,
         )
         build_s = time.time() - t0
         files_per_sec = n_docs / build_s

@@ -3,25 +3,30 @@ north rule: "build per-partition sorted posting lists ... then
 shuffle-merge them into a global term-partitioned inverted index with
 salted repartitioning for hot-term skew").
 
-Two grouped stages, both Arrow-batched:
+One shuffle on the term key routes every posting row by the term's df:
 
-1. **Salted partial build** — every (term, doc) impact row gets a
+1. **Streaming encode (df ≤ POSTINGS_PER_SHARD — the Zipf tail, i.e.
+   nearly every term)** — ``sortWithinPartitions(term, doc_id)`` then
+   ``mapInPandas``: one Python call per partition walks the sorted
+   Arrow batches, finds term boundaries with numpy and encodes each
+   term's slice (delta+varbyte blocks + block-max metadata, codec.py)
+   straight into final segments. Only the batch's unfinished last
+   term is carried into the next batch.
+
+2. **Salted build (hot terms)** — every hot (term, doc) row gets a
    ``shard`` = floor(doc_id / shard_width(term)); shard count scales
-   with the term's df (hot terms → many shards, rare terms → 1), so
-   no single reducer ever owns a whole stopword. Range-sharding by
-   doc_id (not hash-salting) is deliberate: shard doc-id ranges are
-   DISJOINT and ordered, so the merge is a concatenation of
-   pre-sorted runs — no re-sort. ``groupBy(term, shard)
-   .applyInPandas`` sorts its group by doc_id and encodes one partial
-   segment (delta+varbyte blocks + block-max metadata, codec.py).
+   with df, so no single reducer ever owns a whole stopword.
+   ``groupBy(term, shard).applyInPandas`` encodes one partial segment
+   per shard; ``groupBy(term).applyInPandas`` then receives the ≤S
+   compressed partials (bytes, not postings — the second shuffle
+   moves ~100× less data), concatenates them in min_doc_id order and
+   re-encodes. Per-group UDF calls are affordable here because hot
+   terms are few.
 
-2. **Shuffle-merge** — ``groupBy(term).applyInPandas`` receives the
-   ≤S compressed partial segments of a term (bytes, not postings —
-   the second shuffle moves ~100× less data), concatenates them in
-   min_doc_id order, and re-encodes into final segments capped at
-   MAX_SEGMENT_POSTINGS so a 10^12-scale stopword becomes many
-   bounded rows instead of one unbounded blob. Single-shard terms
-   within the cap pass their blobs through untouched.
+Either way a term's postings become final segments split at doc-band
+boundaries and capped at MAX_SEGMENT_POSTINGS, so a 10^12-scale
+stopword becomes many bounded rows instead of one unbounded blob; the
+bytes of a term's segments do not depend on the route it took.
 
 The stored index is partitioned by ``bucket = crc32(term) %
 NUM_TERM_BUCKETS`` — query-side partition pruning reads only the
@@ -93,6 +98,13 @@ SEGMENT_FIELDS = [
 ]
 SEGMENT_SCHEMA = T.StructType(SEGMENT_FIELDS)
 INDEX_SCHEMA = T.StructType(SEGMENT_FIELDS + [T.StructField("bucket", T.IntegerType())])
+# int64-keyed build (build_segments_keyed): tkey + term '' + bucket
+KEYED_SEGMENT_SCHEMA = T.StructType(
+    [T.StructField("tkey", T.LongType())]
+    + SEGMENT_FIELDS
+    + [T.StructField("bucket", T.IntegerType())]
+)
+_KEYED_COLS = KEYED_SEGMENT_SCHEMA.fieldNames()
 
 
 def term_bucket(term: str) -> int:
@@ -172,86 +184,181 @@ def row_to_segment(row) -> Segment:
     )
 
 
-# ------------------------------------------------------- stage 1: salted
+# ------------------------------------------------------- segment rows
+#
+# Every encoder below serves both key types: ``key="term"`` (the term
+# string is the group key) and ``key="tkey"`` (int64 xxhash64 key, term
+# left '' for the dictionary join in plans/build_index.py, bucket
+# carried in from the dictionary).
 
 
-def _encode_partial(pdf: pd.DataFrame) -> pd.DataFrame:
-    """One (term, shard) group → one compressed partial segment row."""
-    pdf = pdf.sort_values("doc_id")
-    seg = encode_segment(
-        term=pdf["term"].iloc[0],
-        df=int(pdf["df"].iloc[0]),
-        doc_ids=pdf["doc_id"].to_numpy(np.int64),
-        tfs=pdf["tf"].to_numpy(np.int64),
-        impacts=pdf["impact"].to_numpy(np.float64),
-    )
-    return pd.DataFrame([_segment_to_dict(seg, 0)])
+def _is_keyed(key: str) -> bool:
+    return key == "tkey"
 
 
-def build_partial_segments(
-    impact_tf: DataFrame,
-    n_docs: int,
-    postings_per_shard: int = POSTINGS_PER_SHARD,
-) -> DataFrame:
-    """impact_tf: (doc_id, term, tf, impact, df) → partial segments.
-
-    shard = floor(doc_id / ceil(n_docs / n_shards(term))) with
-    n_shards = ceil(df / postings_per_shard): range-sharded salt.
-    """
-    n_shards = F.ceil(F.col("df") / F.lit(postings_per_shard))
-    shard_width = F.ceil(F.lit(n_docs) / n_shards)
-    salted = impact_tf.withColumn(
-        "shard", F.floor(F.col("doc_id") / shard_width).cast("int")
-    )
-    return salted.groupBy("term", "shard").applyInPandas(
-        _encode_partial, schema=SEGMENT_SCHEMA
-    )
+def _final_schema(key: str) -> T.StructType:
+    return KEYED_SEGMENT_SCHEMA if _is_keyed(key) else INDEX_SCHEMA
 
 
-# ------------------------------------------------------ stage 2: merge
-
-
-def _encode_runs(
-    term: str,
+def _segment_rows(
+    key: str,
+    kval,
+    bucket: int,
     df_: int,
     doc_ids: np.ndarray,
     tfs: np.ndarray,
     imps: np.ndarray,
     band_size: int,
-    bucket: int | None = None,
-) -> pd.DataFrame:
+) -> list[dict]:
+    """One key's ascending posting run → final segment rows, split at
+    band boundaries and capped at MAX_SEGMENT_POSTINGS."""
+    term = "" if _is_keyed(key) else kval
     rows = []
     for seg_idx, (start, end) in enumerate(
         _split_runs(doc_ids, band_size, MAX_SEGMENT_POSTINGS)
     ):
-        seg = encode_segment(
-            term, df_, doc_ids[start:end], tfs[start:end], imps[start:end]
+        d = _segment_to_dict(
+            encode_segment(
+                term, df_, doc_ids[start:end], tfs[start:end], imps[start:end]
+            ),
+            seg_idx,
         )
-        d = _segment_to_dict(seg, seg_idx)
-        d["bucket"] = term_bucket(term) if bucket is None else bucket
+        d[key] = kval
+        d["bucket"] = bucket
         rows.append(d)
-    return pd.DataFrame(rows)[[f.name for f in INDEX_SCHEMA.fields]]
+    return rows
 
 
-def _merge_term_fn(band_size: int):
-    def _merge_term(pdf: pd.DataFrame) -> pd.DataFrame:
-        """All partial segments of one term → final segments split at
-        band boundaries and capped at MAX_SEGMENT_POSTINGS."""
+# ---------------------------------------- single-shard: streaming encode
+
+
+def _encode_sorted(pdf: pd.DataFrame, key: str, band_size: int) -> pd.DataFrame:
+    """Rows sorted by (key, doc_id) holding WHOLE keys → their final
+    segment rows. Key boundaries come from one numpy compare over the
+    batch; the Python loop runs per key, never per posting."""
+    keys = pdf[key].to_numpy()
+    doc_ids = pdf["doc_id"].to_numpy(np.int64)
+    tfs = pdf["tf"].to_numpy(np.int64)
+    imps = pdf["impact"].to_numpy(np.float64)
+    dfs = pdf["df"].to_numpy(np.int64)
+    buckets = pdf["bucket"].to_numpy(np.int64) if _is_keyed(key) else None
+    new_key = keys[1:] != keys[:-1]
+    # the sort is what makes each slice a posting list — assert it
+    # rather than re-sort (re-sorting would hide a plan bug)
+    assert not np.any((np.diff(doc_ids) <= 0) & ~new_key), "unsorted postings"
+    bounds = [0, *(np.flatnonzero(new_key) + 1).tolist(), len(keys)]
+    rows: list[dict] = []
+    for a, b in zip(bounds, bounds[1:]):
+        if _is_keyed(key):
+            kval, bucket = int(keys[a]), int(buckets[a])
+        else:
+            kval, bucket = keys[a], term_bucket(keys[a])
+        rows += _segment_rows(
+            key,
+            kval,
+            bucket,
+            int(dfs[a]),
+            doc_ids[a:b],
+            tfs[a:b],
+            imps[a:b],
+            band_size,
+        )
+    return pd.DataFrame(rows, columns=_final_schema(key).fieldNames())
+
+
+def _stream_encode_fn(key: str, band_size: int):
+    """mapInPandas body of the single-shard branch: one Python call per
+    partition, one output frame per Arrow batch. Only the batch's last
+    key may continue into the next batch, so only its rows are carried
+    — memory stays bounded by one key's postings (≤ postings_per_shard
+    on this branch), not by the partition."""
+
+    def _encode(it):
+        pending: list[pd.DataFrame] = []  # rows of the unfinished key
+        for pdf in it:
+            if pdf.empty:
+                continue
+            keys = pdf[key].to_numpy()
+            breaks = np.flatnonzero(keys[1:] != keys[:-1]) + 1
+            cut = int(breaks[-1]) if len(breaks) else 0
+            if cut == 0 and pending and pending[-1][key].iat[-1] == keys[0]:
+                pending.append(pdf)
+                continue
+            done = pd.concat(pending + [pdf.iloc[:cut]], ignore_index=True)
+            pending = [pdf.iloc[cut:]]
+            if len(done):
+                yield _encode_sorted(done, key, band_size)
+        if pending:
+            yield _encode_sorted(
+                pd.concat(pending, ignore_index=True), key, band_size
+            )
+
+    return _encode
+
+
+# ---------------------------------------------- hot terms: salted build
+#
+# 1. Salted partial build — every hot (key, doc) row gets a ``shard`` =
+#    floor(doc_id / shard_width(key)); shard count scales with df, so
+#    no single reducer ever owns a whole stopword. Range-sharding by
+#    doc_id (not hash-salting) is deliberate: shard doc-id ranges are
+#    DISJOINT and ordered, so the merge is a concatenation of
+#    pre-sorted runs — no re-sort.
+# 2. Shuffle-merge — ``groupBy(key)`` receives the ≤S compressed
+#    partial segments of a key (bytes, not postings) and re-encodes
+#    them into final segments.
+
+
+def _encode_partial_fn(key: str):
+    def _encode_partial(pdf: pd.DataFrame) -> pd.DataFrame:
+        """One (key, shard) group → one compressed partial segment row."""
+        pdf = pdf.sort_values("doc_id")
+        first = pdf.iloc[0]
+        seg = encode_segment(
+            term="" if _is_keyed(key) else first["term"],
+            df=int(first["df"]),
+            doc_ids=pdf["doc_id"].to_numpy(np.int64),
+            tfs=pdf["tf"].to_numpy(np.int64),
+            impacts=pdf["impact"].to_numpy(np.float64),
+        )
+        d = _segment_to_dict(seg, 0)
+        if _is_keyed(key):
+            d["tkey"] = int(first["tkey"])
+            d["bucket"] = int(first["bucket"])
+            return pd.DataFrame([d])[_KEYED_COLS]
+        return pd.DataFrame([d])
+
+    return _encode_partial
+
+
+def _merge_fn(key: str, band_size: int, resort: bool = False):
+    """All partial segments of one key → final segments split at band
+    boundaries and capped at MAX_SEGMENT_POSTINGS. ``resort=False``:
+    the partials are disjoint ascending shard ranges, so their
+    concatenation IS sorted (asserted, not re-sorted — re-sorting would
+    hide salt bugs). ``resort=True`` (map-side partials, overlapping
+    doc ranges): concatenate and sort by doc_id, unique per key, so the
+    result is independent of shuffle arrival order."""
+    cols = _final_schema(key).fieldNames()
+
+    def _merge(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("min_doc_id")
-        term = pdf["term"].iloc[0]
-        df_ = int(pdf["df"].iloc[0])
-        total = int(pdf["n_postings"].sum())
-
+        first = pdf.iloc[0]
+        if _is_keyed(key):
+            kval, bucket = int(first["tkey"]), int(first["bucket"])
+        else:
+            kval, bucket = first["term"], term_bucket(first["term"])
+        df_ = int(first["df"])
         if (
             len(pdf) == 1
-            and total <= MAX_SEGMENT_POSTINGS
-            and int(pdf["min_doc_id"].iloc[0]) // band_size
-            == int(pdf["max_doc_id"].iloc[0]) // band_size
+            and int(first["n_postings"]) <= MAX_SEGMENT_POSTINGS
+            and int(first["min_doc_id"]) // band_size
+            == int(first["max_doc_id"]) // band_size
         ):
             out = pdf.iloc[[0]].copy()  # pass-through: blobs reused as-is
             out["seg_idx"] = 0
-            out["bucket"] = term_bucket(term)
-            return out[[f.name for f in INDEX_SCHEMA.fields]]
+            out["bucket"] = bucket
+            return out[cols]
 
         docs, tfs, imps = [], [], []
         for _, row in pdf.iterrows():
@@ -262,23 +369,16 @@ def _merge_term_fn(band_size: int):
         doc_ids = np.concatenate(docs)
         tfs = np.concatenate(tfs)
         imps = np.concatenate(imps)
-        # shards are disjoint ascending ranges — concatenation IS
-        # sorted; assert rather than re-sort (re-sorting would hide
-        # salt bugs).
-        assert bool(np.all(np.diff(doc_ids) > 0)), f"unsorted merge {term!r}"
-        return _encode_runs(term, df_, doc_ids, tfs, imps, band_size)
+        if resort:
+            order = np.argsort(doc_ids, kind="stable")
+            doc_ids, tfs, imps = doc_ids[order], tfs[order], imps[order]
+        assert bool(np.all(np.diff(doc_ids) > 0)), f"unsorted merge {kval!r}"
+        return pd.DataFrame(
+            _segment_rows(key, kval, bucket, df_, doc_ids, tfs, imps, band_size),
+            columns=cols,
+        )
 
-    return _merge_term
-
-
-def merge_segments(
-    partial: DataFrame, band_size: int = DOC_BAND_SIZE
-) -> DataFrame:
-    """Shuffle-merge: repartition by term (blobs only — cheap) and
-    concat each term's pre-sorted shard runs into final segments."""
-    return partial.groupBy("term").applyInPandas(
-        _merge_term_fn(band_size), schema=INDEX_SCHEMA
-    )
+    return _merge
 
 
 # ------------------------------------- map-side partial encode path
@@ -320,43 +420,6 @@ def _mapside_partial_fn(projected_cols: list[str]):
     return _partials
 
 
-def _merge_term_mapside_fn(band_size: int):
-    def _merge_term(pdf: pd.DataFrame) -> pd.DataFrame:
-        """All partial segments of one term (one per map partition,
-        doc ranges OVERLAPPING in general) → final segments. Unlike
-        the range-sharded merge, runs are concatenated and re-sorted
-        by doc_id (unique per term, so the sort is deterministic
-        regardless of shuffle arrival order)."""
-        term = pdf["term"].iloc[0]
-        df_ = int(pdf["df"].iloc[0])
-        total = int(pdf["n_postings"].sum())
-        if (
-            len(pdf) == 1
-            and total <= MAX_SEGMENT_POSTINGS
-            and int(pdf["min_doc_id"].iloc[0]) // band_size
-            == int(pdf["max_doc_id"].iloc[0]) // band_size
-        ):
-            out = pdf.iloc[[0]].copy()
-            out["seg_idx"] = 0
-            out["bucket"] = term_bucket(term)
-            return out[[f.name for f in INDEX_SCHEMA.fields]]
-        docs, tfs, imps = [], [], []
-        for _, row in pdf.iterrows():
-            d, t, i = row_to_segment(row).decode_all()
-            docs.append(d)
-            tfs.append(t)
-            imps.append(i)
-        doc_ids = np.concatenate(docs)
-        order = np.argsort(doc_ids, kind="stable")
-        doc_ids = doc_ids[order]
-        tfs = np.concatenate(tfs)[order]
-        imps = np.concatenate(imps)[order]
-        assert bool(np.all(np.diff(doc_ids) > 0)), f"dup doc_id {term!r}"
-        return _encode_runs(term, df_, doc_ids, tfs, imps, band_size)
-
-    return _merge_term
-
-
 def build_segments_mapside(
     impact_tf: DataFrame,
     n_docs: int,
@@ -385,28 +448,40 @@ def build_segments_mapside(
         _mapside_partial_fn(partial_cols), schema=SEGMENT_SCHEMA
     )
     return partial.groupBy("term").applyInPandas(
-        _merge_term_mapside_fn(band_size), schema=INDEX_SCHEMA
+        _merge_fn("term", band_size, resort=True), schema=INDEX_SCHEMA
     )
 
 
 # --------------------------------------------- adaptive single-pass
 
 
-def _encode_final_fn(band_size: int):
-    def _encode_final(pdf: pd.DataFrame) -> pd.DataFrame:
-        """One single-shard term → final segment rows directly
-        (no second shuffle), split at band boundaries + cap."""
-        pdf = pdf.sort_values("doc_id")
-        return _encode_runs(
-            pdf["term"].iloc[0],
-            int(pdf["df"].iloc[0]),
-            pdf["doc_id"].to_numpy(np.int64),
-            pdf["tf"].to_numpy(np.int64),
-            pdf["impact"].to_numpy(np.float64),
-            band_size,
-        )
-
-    return _encode_final
+def _build(
+    impact: DataFrame,
+    key: str,
+    n_docs: int,
+    postings_per_shard: int,
+    band_size: int,
+) -> DataFrame:
+    common = impact.repartition(key)
+    single = (
+        common.filter(F.col("df") <= postings_per_shard)
+        .sortWithinPartitions(key, "doc_id")
+        .mapInPandas(_stream_encode_fn(key, band_size), schema=_final_schema(key))
+    )
+    hot = common.filter(F.col("df") > postings_per_shard)
+    n_shards = F.ceil(F.col("df") / F.lit(postings_per_shard))
+    shard_width = F.ceil(F.lit(n_docs) / n_shards)
+    salted = hot.withColumn(
+        "shard", F.floor(F.col("doc_id") / shard_width).cast("int")
+    )
+    partial = salted.groupBy(key, "shard").applyInPandas(
+        _encode_partial_fn(key),
+        schema=KEYED_SEGMENT_SCHEMA if _is_keyed(key) else SEGMENT_SCHEMA,
+    )
+    merged = partial.groupBy(key).applyInPandas(
+        _merge_fn(key, band_size), schema=_final_schema(key)
+    )
+    return single.unionByName(merged)
 
 
 def build_segments(
@@ -415,40 +490,35 @@ def build_segments(
     postings_per_shard: int = POSTINGS_PER_SHARD,
     band_size: int = DOC_BAND_SIZE,
 ) -> DataFrame:
-    """Adaptive index build — the cost-based route the reference's
-    'multi-model routing' maps to (SURVEY.md §4.1 last row):
+    """Adaptive index build over (doc_id, term, tf, impact, df) — the
+    cost-based route the reference's 'multi-model routing' maps to
+    (SURVEY.md §4.1 last row):
 
     - terms with df ≤ postings_per_shard (the overwhelming majority —
-      Zipf tail) encode in ONE grouped pass: a single shuffle, no
-      merge stage at all;
+      Zipf tail) take the streaming encode: ``repartition(term)`` →
+      ``sortWithinPartitions(term, doc_id)`` → ``mapInPandas``, one
+      shuffle and ONE Python call per partition that cuts every
+      term's posting list out of the sorted Arrow batches
+      (``_stream_encode_fn``). A ``groupBy(term).applyInPandas`` here
+      paid a pandas frame round trip per term: a warm encode + write of
+      5,000 terms (302k postings, local[4]) took 11.6–12.0 s that way
+      and 3.3–4.0 s streamed;
     - hot terms (df > postings_per_shard) take the salted two-stage
       path: range-sharded partial segments, then the blob-only
-      shuffle-merge.
+      shuffle-merge, so no task holds a stopword's postings.
 
     Both paths produce identical bytes for a given term (asserted in
-    tests), so the split is purely physical.
+    tests/test_postings_stream.py), so the split is purely physical.
 
     The two branches consume ONE shared ``repartition("term")``
     exchange: without it, each branch's filter pushed into its own
     subtree and the tf scan + impact joins evaluated TWICE (union
     branches share nothing unless the subplans are identical). Hash
-    partitioning on ``term`` satisfies the single-path groupBy's
-    distribution, so no second exchange appears for the tail, and
-    AQE's stage reuse materializes the common shuffle once — measured
-    30.8 s → 27.9 s at 200k docs with byte-identical output and
-    unchanged shuffle volume (tools/bench_encode_ab_r6.py).
+    partitioning on ``term`` also satisfies the hot branch's
+    (term, shard) grouping, so AQE's stage reuse materializes the
+    common shuffle once.
     """
-    common = impact_tf.repartition("term")
-    single = common.filter(
-        F.col("df") <= postings_per_shard
-    ).groupBy("term").applyInPandas(
-        _encode_final_fn(band_size), schema=INDEX_SCHEMA
-    )
-    hot = common.filter(F.col("df") > postings_per_shard)
-    merged = merge_segments(
-        build_partial_segments(hot, n_docs, postings_per_shard), band_size
-    )
-    return single.unionByName(merged)
+    return _build(impact_tf, "term", n_docs, postings_per_shard, band_size)
 
 
 # ------------------------------------------ int64-keyed build variant
@@ -464,83 +534,6 @@ def build_segments(
 # at dictionary build (plans/build_index.py raises on any tkey with
 # two terms — 2⁻⁶⁴-scale, but an identity-breaking hazard if ignored).
 
-KEYED_SEGMENT_SCHEMA = T.StructType(
-    [T.StructField("tkey", T.LongType())]
-    + SEGMENT_FIELDS
-    + [T.StructField("bucket", T.IntegerType())]
-)
-_KEYED_COLS = [f.name for f in KEYED_SEGMENT_SCHEMA.fields]
-
-
-def _encode_partial_keyed(pdf: pd.DataFrame) -> pd.DataFrame:
-    pdf = pdf.sort_values("doc_id")
-    seg = encode_segment(
-        term="",
-        df=int(pdf["df"].iloc[0]),
-        doc_ids=pdf["doc_id"].to_numpy(np.int64),
-        tfs=pdf["tf"].to_numpy(np.int64),
-        impacts=pdf["impact"].to_numpy(np.float64),
-    )
-    d = _segment_to_dict(seg, 0)
-    d["tkey"] = int(pdf["tkey"].iloc[0])
-    d["bucket"] = int(pdf["bucket"].iloc[0])
-    return pd.DataFrame([d])[_KEYED_COLS]
-
-
-def _encode_final_keyed_fn(band_size: int):
-    def _encode_final_keyed(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("doc_id")
-        out = _encode_runs(
-            "",
-            int(pdf["df"].iloc[0]),
-            pdf["doc_id"].to_numpy(np.int64),
-            pdf["tf"].to_numpy(np.int64),
-            pdf["impact"].to_numpy(np.float64),
-            band_size,
-            bucket=int(pdf["bucket"].iloc[0]),
-        )
-        out.insert(0, "tkey", int(pdf["tkey"].iloc[0]))
-        return out[_KEYED_COLS]
-
-    return _encode_final_keyed
-
-
-def _merge_term_keyed_fn(band_size: int):
-    def _merge_term_keyed(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("min_doc_id")
-        tkey = int(pdf["tkey"].iloc[0])
-        bucket = int(pdf["bucket"].iloc[0])
-        df_ = int(pdf["df"].iloc[0])
-        total = int(pdf["n_postings"].sum())
-
-        if (
-            len(pdf) == 1
-            and total <= MAX_SEGMENT_POSTINGS
-            and int(pdf["min_doc_id"].iloc[0]) // band_size
-            == int(pdf["max_doc_id"].iloc[0]) // band_size
-        ):
-            out = pdf.iloc[[0]].copy()
-            out["seg_idx"] = 0
-            return out[_KEYED_COLS]
-
-        docs, tfs, imps = [], [], []
-        for _, row in pdf.iterrows():
-            d, t, i = row_to_segment(row).decode_all()
-            docs.append(d)
-            tfs.append(t)
-            imps.append(i)
-        doc_ids = np.concatenate(docs)
-        tfs = np.concatenate(tfs)
-        imps = np.concatenate(imps)
-        assert bool(np.all(np.diff(doc_ids) > 0)), f"unsorted merge {tkey}"
-        out = _encode_runs(
-            "", df_, doc_ids, tfs, imps, band_size, bucket=bucket
-        )
-        out.insert(0, "tkey", tkey)
-        return out[_KEYED_COLS]
-
-    return _merge_term_keyed
-
 
 def build_segments_keyed(
     impact_tf_k: DataFrame,
@@ -549,26 +542,7 @@ def build_segments_keyed(
     band_size: int = DOC_BAND_SIZE,
 ) -> DataFrame:
     """build_segments over (doc_id, tkey, bucket, tf, impact, df) —
-    same adaptive single-pass/salted split, int64 group keys, term
-    column left '' for the dictionary join in plans/build_index.py.
-    Shares one tkey exchange across the branches like
-    build_segments."""
-    common = impact_tf_k.repartition("tkey")
-    single = common.filter(
-        F.col("df") <= postings_per_shard
-    ).groupBy("tkey").applyInPandas(
-        _encode_final_keyed_fn(band_size), schema=KEYED_SEGMENT_SCHEMA
-    )
-    hot = common.filter(F.col("df") > postings_per_shard)
-    n_shards = F.ceil(F.col("df") / F.lit(postings_per_shard))
-    shard_width = F.ceil(F.lit(n_docs) / n_shards)
-    salted = hot.withColumn(
-        "shard", F.floor(F.col("doc_id") / shard_width).cast("int")
-    )
-    partial = salted.groupBy("tkey", "shard").applyInPandas(
-        _encode_partial_keyed, schema=KEYED_SEGMENT_SCHEMA
-    )
-    merged = partial.groupBy("tkey").applyInPandas(
-        _merge_term_keyed_fn(band_size), schema=KEYED_SEGMENT_SCHEMA
-    )
-    return single.unionByName(merged)
+    the same streaming single-shard encode (sorted by (tkey, doc_id))
+    and salted hot-key path, int64 keys, term column left '' for the
+    dictionary join in plans/build_index.py."""
+    return _build(impact_tf_k, "tkey", n_docs, postings_per_shard, band_size)

@@ -2,21 +2,27 @@
 
     source table → sha256 invariant → tokenize (built-ins) →
     TF groupBy → stats aggregates → impact join →
-    salted (term, shard) repartition + applyInPandas encode →
-    shuffle-merge by term → bucket-partitioned Parquet index
+    term repartition → sorted streaming encode (tail terms) |
+    salted (term, shard) encode + shuffle-merge (hot terms) →
+    bucket-partitioned Parquet index
     + doc_map + stats.json + per-partition lineage manifest.
 
 Stage boundaries (= the shuffles Catalyst plans):
   1. TF hash-agg on (doc_id, term)          [partial+final, map-side combine]
   2. df hash-agg on term
-  3. salted repartition on (term, shard)    [explicit skew handling]
-  4. merge repartition on term              [moves compressed blobs only]
+  3. repartition on term                    [shared by both encode routes]
+  4. merge groupBy on term (hot terms only) [moves compressed blobs only]
+  5. repartition on bucket                  [one file per bucket]
 
 Checkpointing: three durable stages — 'docs' (doc_id assignment +
 doc_map), 'tf' (tokenize output: the expensive stage whose loss the
-north rule forbids), 'postings' (the index, written in BUCKET GROUPS
-with a manifest row per group so a kill mid-stage resumes at the
-first incomplete group without re-tokenizing anything).
+north rule forbids), 'postings' (the index). The postings stage is ONE
+pass over all buckets by default; ``bucket_groups=G`` splits it into G
+passes over disjoint bucket sets, each committed with a manifest row,
+so a kill mid-stage resumes at the first incomplete group without
+re-tokenizing anything — a resume option, paid for with G scans of
+the impact subtree. The manifest records the grouping its group ids
+refer to; resuming under another grouping restarts the stage.
 
 The build is deterministic end-to-end, so resume produces a
 byte-identical index (asserted in tests/test_resume.py).
@@ -26,6 +32,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
 from dataclasses import dataclass, fields as dc_fields
 
@@ -78,7 +85,7 @@ def build_index(
     out_dir: str,
     input_id: str,
     text_col: str = "content",
-    bucket_groups: int = 4,
+    bucket_groups: int = 1,
     postings_per_shard: int = POSTINGS_PER_SHARD,
     source_path: str | None = None,
     band_size: int = DOC_BAND_SIZE,
@@ -89,7 +96,8 @@ def build_index(
     ``files`` must carry a dense ``doc_id`` (sources.registry
     .with_doc_ids) plus identity columns; ``input_id`` is the caller's
     stable identifier for the input snapshot (path + version / count)
-    used in checkpoint fingerprints.
+    used in checkpoint fingerprints. ``bucket_groups`` > 1 commits the
+    postings stage in that many resumable passes (module docstring).
     """
     os.makedirs(out_dir, exist_ok=True)
     man = Manifest.load(out_dir)
@@ -143,8 +151,6 @@ def build_index(
         # from the previous build must go with it, or avgdl/dl (and
         # therefore every impact) would silently come from the old
         # corpus ("fingerprints cover config, not just data").
-        import shutil
-
         for derived in (dl_path, os.path.join(out_dir, "doc_map")):
             if os.path.exists(derived):
                 shutil.rmtree(derived)
@@ -199,8 +205,8 @@ def build_index(
     }
     man.save()
 
-    # ---------------- stage: postings (salted build + shuffle-merge),
-    # written in bucket groups for intra-stage resume.
+    # ---------------- stage: postings (streaming encode + salted
+    # hot-term merge), written in bucket groups for intra-stage resume.
     fp_post = stage_fingerprint(
         "postings",
         fp_tf,
@@ -210,6 +216,16 @@ def build_index(
     if not man.is_complete("postings", fp_post):
         man.misses += 1
         man.begin("postings", fp_post)
+        post = man.stages["postings"]
+        if post.get("bucket_groups") != bucket_groups:
+            # group g names a different bucket set under another
+            # grouping: a resume that kept its committed groups would
+            # skip buckets and still mark the stage complete. Restart
+            # the stage, and drop whatever an earlier grouping or
+            # fingerprint left on disk.
+            post.update(partitions=[], bucket_groups=bucket_groups)
+            man.save()
+            shutil.rmtree(postings_path, ignore_errors=True)
         snap_post = _executor_totals(spark)
         done = man.completed_partitions("postings", fp_post)
         tdict = None
@@ -270,9 +286,14 @@ def build_index(
                 man.hits += 1
                 continue
             t0 = time.time()
+            grp = (
+                impact_b
+                if len(buckets) == NUM_TERM_BUCKETS
+                else impact_b.filter(F.col("bucket").isin(buckets))
+            )
             if hashed_term_keys:
                 part = build_segments_keyed(
-                    impact_b.filter(F.col("bucket").isin(buckets)),
+                    grp,
                     stats.n_docs,
                     postings_per_shard,
                     band_size,
@@ -280,11 +301,6 @@ def build_index(
                     F.broadcast(tdict.select("tkey", "term")), "tkey"
                 ).select(*[f.name for f in INDEX_SCHEMA.fields])
             else:
-                grp = (
-                    impact_b
-                    if len(buckets) == NUM_TERM_BUCKETS
-                    else impact_b.filter(F.col("bucket").isin(buckets))
-                )
                 part = build_segments(
                     grp.drop("bucket"),
                     stats.n_docs,

@@ -55,6 +55,13 @@ def get_spark(
         .config("spark.hadoop.parquet.block.size", str(16 * 1024 * 1024))
         .config("spark.sql.files.maxPartitionBytes", str(16 * 1024 * 1024))
         .config("spark.ui.enabled", "false")
+        # A one-pass postings build puts all NUM_TERM_BUCKETS (64)
+        # bucket= dirs under one group= dir. Above this threshold
+        # (default 32 paths per directory level) every cold
+        # spark.read.parquet of the index lists them with a Spark job —
+        # one extra job of ~0.35 s on each cold query, where listing 64
+        # local dirs on the driver takes milliseconds.
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "1024")
     )
     # shuffle/spill to tmpfs when available: disk IO contention
     # otherwise serializes the high-core-count runs

@@ -163,6 +163,38 @@ def test_cold_search_plan_prunes_bucket_partitions(spark, engine,
     assert rows and rows[0]["rank"] == 1
 
 
+def test_cold_read_of_one_group_index_starts_no_listing_job(
+    spark, tmp_path_factory
+):
+    """A default (one-pass) build puts all 64 bucket= dirs under one
+    group= dir — above Spark's default parallel partition-discovery
+    threshold of 32, where every cold read of the index would list
+    them with an extra Spark job. session.get_spark raises the
+    threshold; a cold bmw_topk over the default layout must start no
+    more jobs than over a 4-group layout (16 buckets per group)."""
+    from documentindex_spark.corpus import generate_repo_files
+    from documentindex_spark.operators.bmw import bmw_topk
+    from documentindex_spark.plans.build_index import build_index
+    from documentindex_spark.sources.registry import with_doc_ids
+
+    files = with_doc_ids(generate_repo_files(spark, 60)).cache()
+    sc = spark.sparkContext
+    jobs = {}
+    for groups in (None, 4):
+        out = str(tmp_path_factory.mktemp(f"listing_{groups}"))
+        kw = {} if groups is None else {"bucket_groups": groups}
+        built = build_index(spark, files, out, input_id="rf@60-list", **kw)
+        tag = f"cold-topk-{groups}"
+        sc.setJobGroup(tag, "cold bmw_topk")
+        try:
+            bmw_topk(spark, built.postings_path, {0: "merge sort"}, k=10).collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs[groups] = len(sc.statusTracker().getJobIdsForGroup(tag))
+    files.unpersist()
+    assert 0 < jobs[None] <= jobs[4], jobs
+
+
 def test_engine_close_releases_executor_memory(spark, tmp_path_factory):
     from documentindex_spark.corpus import generate_repo_files
     from documentindex_spark.sources.registry import (

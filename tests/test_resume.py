@@ -24,13 +24,9 @@ def _index_content(spark, path):
     )
 
 
-def test_kill_and_resume_byte_identical(spark, repo_files_small, tmp_path, monkeypatch):
-    straight = str(tmp_path / "straight")
-    bi.build_index(
-        spark, repo_files_small, straight, input_id="rf@200", bucket_groups=4
-    )
-
-    killed = str(tmp_path / "killed")
+def _kill_after_two_groups(spark, files, out_dir, monkeypatch):
+    """Run a 4-group build into ``out_dir`` and kill it right after
+    its second group commits."""
     orig = Manifest.record_partition
     calls = {"n": 0}
 
@@ -43,9 +39,19 @@ def test_kill_and_resume_byte_identical(spark, repo_files_small, tmp_path, monke
     monkeypatch.setattr(Manifest, "record_partition", dying)
     with pytest.raises(KeyboardInterrupt):
         bi.build_index(
-            spark, repo_files_small, killed, input_id="rf@200", bucket_groups=4
+            spark, files, out_dir, input_id="rf@200", bucket_groups=4
         )
     monkeypatch.setattr(Manifest, "record_partition", orig)
+
+
+def test_kill_and_resume_byte_identical(spark, repo_files_small, tmp_path, monkeypatch):
+    straight = str(tmp_path / "straight")
+    bi.build_index(
+        spark, repo_files_small, straight, input_id="rf@200", bucket_groups=4
+    )
+
+    killed = str(tmp_path / "killed")
+    _kill_after_two_groups(spark, repo_files_small, killed, monkeypatch)
 
     # manifest after the kill: docs+tf complete, postings partial (2/4)
     man = json.load(open(os.path.join(killed, "_manifest.json")))
@@ -67,6 +73,31 @@ def test_kill_and_resume_byte_identical(spark, repo_files_small, tmp_path, monke
     # final index content-identical to the uninterrupted build
     assert _index_content(spark, killed) == _index_content(spark, straight)
     assert out.n_docs == 200
+
+
+def test_resume_under_another_grouping_rebuilds_every_bucket(
+    spark, repo_files_small, tmp_path, monkeypatch
+):
+    """Group ids name different bucket sets under different groupings:
+    a 4-group build killed after two groups and resumed as one pass
+    (the default) must not skip 'group 0' as done — the index must
+    hold every bucket, content-identical to an uninterrupted build,
+    with no files of the killed grouping left behind."""
+    straight = str(tmp_path / "straight")
+    bi.build_index(spark, repo_files_small, straight, input_id="rf@200")
+
+    killed = str(tmp_path / "killed")
+    _kill_after_two_groups(spark, repo_files_small, killed, monkeypatch)
+    bi.build_index(spark, repo_files_small, killed, input_id="rf@200")
+
+    man = json.load(open(os.path.join(killed, "_manifest.json")))
+    assert man["postings"]["status"] == "complete"
+    assert man["postings"]["bucket_groups"] == 1
+    assert {p["id"] for p in man["postings"]["partitions"]} == {0}
+    assert sorted(os.listdir(os.path.join(killed, "postings"))) == sorted(
+        os.listdir(os.path.join(straight, "postings"))
+    )
+    assert _index_content(spark, killed) == _index_content(spark, straight)
 
 
 def test_resume_noop_when_complete(spark, repo_files_small, tmp_path):

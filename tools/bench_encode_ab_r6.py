@@ -1,4 +1,5 @@
-"""Round-6 A/B: grouped encode (build_segments) vs map-side partial
+"""A/B: the default encode (build_segments: term shuffle, streaming
+encode of tail terms, salted merge of hot terms) vs map-side partial
 encode (build_segments_mapside).
 
 Interleaved reps; reports wall, shuffle bytes, and asserts the stored
@@ -50,34 +51,9 @@ dfreq = document_frequencies(tf)
 imp = impacts(tf, dl, dfreq, stats)
 print(f"setup: n_docs={stats.n_docs}", flush=True)
 
-from documentindex_spark.operators.postings import (
-    build_partial_segments,
-    merge_segments,
-)
-
-
-from documentindex_spark.constants import DOC_BAND_SIZE, POSTINGS_PER_SHARD
-from documentindex_spark.operators.postings import (
-    INDEX_SCHEMA,
-    _encode_final_fn,
-)
-
-
-def build_segments_sharedx(impact_tf, n_docs, pps=POSTINGS_PER_SHARD, band_size=DOC_BAND_SIZE):
-    common = impact_tf.repartition("term")
-    single = common.filter(F.col("df") <= pps).groupBy("term").applyInPandas(
-        _encode_final_fn(band_size), schema=INDEX_SCHEMA
-    )
-    hot = common.filter(F.col("df") > pps)
-    merged = merge_segments(
-        build_partial_segments(hot, n_docs, pps), band_size
-    )
-    return single.unionByName(merged)
-
-
 variants = {
-    "grouped": lambda path: write_bucketed(build_segments(imp, stats.n_docs), path),
-    "sharedx": lambda path: write_bucketed(build_segments_sharedx(imp, stats.n_docs), path),
+    "default": lambda path: write_bucketed(build_segments(imp, stats.n_docs), path),
+    "mapside": lambda path: write_bucketed(build_segments_mapside(imp, stats.n_docs), path),
 }
 
 res = {k: [] for k in variants}
@@ -114,8 +90,8 @@ def content(path):
     )
 
 
-a = content(f"{out}/p_grouped")
-b = content(f"{out}/p_sharedx")
+a = content(f"{out}/p_default")
+b = content(f"{out}/p_mapside")
 print("content identical:", a == b, f"({len(a)} vs {len(b)} rows)", flush=True)
 
 import shutil
