@@ -4,10 +4,10 @@
 EXACT: block-max values are true per-block maxima of the precomputed
 float64 impacts, skip decisions use ``<= θ`` only when the heap is
 full (a doc that can only TIE the k-th score loses the
-(score DESC, doc_id ASC) tie-break anyway, because WAND evaluates
-candidates in ascending doc_id), and full evaluation sums impacts in
-ascending-term order — so results are rank- AND score-identical to
-the exhaustive scorer (asserted in tests/test_bmw.py).
+(score DESC, doc_id ASC) tie-break anyway, because windows are scored
+in ascending doc_id), and scores sum impacts in ascending-term order —
+so results are rank- AND score-identical to the exhaustive scorer
+(asserted in tests/test_bmw_property.py).
 
 Replaces the reference's full LLM scan
 (/root/reference/src/documentindex/searcher.py:81-138: score every
@@ -17,13 +17,15 @@ Execution shape: ``queries ⋈ postings on term`` (bucket partition
 pruning + term predicate pushed to the parquet scan) →
 ``groupBy(query_id).applyInPandas(BMW)`` — queries score in parallel
 across the cluster; each task touches only its terms' segments.
-Per-query work is numpy-over-blocks; the Python loop is over pivots,
-not postings.
+Every lane (the two driver-local serve lanes, the per-query and
+banded Spark lanes, boolean queries) ends in ``bmw_topk_local``, which
+scores window-at-a-time: block metadata bounds each doc-id window,
+skipped windows are never decoded, and a scored window is one numpy
+pass over its decoded blocks. Python loops over windows, terms and
+blocks, never over postings.
 """
 
 from __future__ import annotations
-
-import heapq
 
 import numpy as np
 import pandas as pd
@@ -31,129 +33,113 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..constants import TOPK_DEFAULT
+from ..constants import BLOCK_SIZE, TOPK_DEFAULT
 from ..functions.tokenize import query_terms
 from .codec import Segment
 from .postings import row_to_segment, term_bucket
 
-_INF = np.iinfo(np.int64).max
+# A window is cut after every WINDOW_POSTINGS postings of the query's
+# lists (all terms together, counted from block metadata), at a block
+# end. Large enough that a query over lists of about a thousand
+# postings scores as one window: a window per block cost ~1.7x one
+# exhaustive pass on such lists. Skipping inside a window is per
+# block (_live_blocks), so long skewed lists skip most of their
+# blocks at this size too.
+WINDOW_POSTINGS = 32 * BLOCK_SIZE
 
 
-class _Cursor:
-    """Forward-only cursor over one term's segments (min_doc ordered).
+def _id_array(ids) -> np.ndarray | None:
+    """Any container of doc_ids → sorted int64 array (membership by
+    searchsorted), or None when it holds none."""
+    if ids is None or len(ids) == 0:
+        return None
+    if isinstance(ids, np.ndarray):
+        arr = ids.astype(np.int64, copy=False)
+    else:
+        arr = np.fromiter(ids, dtype=np.int64, count=len(ids))
+    return np.sort(arr)
 
-    Blocks decode lazily and are cached; ``advance_to`` uses
-    searchsorted over block_max_doc, then within the block.
-    """
 
-    __slots__ = (
-        "term", "segs", "seg_i", "blk_i", "pos", "ub", "boost",
-        "_loaded", "_cur_docs", "_cur_imps",
-    )
+def _in_sorted(values: np.ndarray, sorted_ids: np.ndarray) -> np.ndarray:
+    """Boolean mask: which of ``values`` occur in ``sorted_ids``."""
+    pos = np.searchsorted(sorted_ids, values)
+    pos[pos == len(sorted_ids)] = 0
+    return sorted_ids[pos] == values
 
-    def __init__(
-        self, term: str, segments: list[Segment], boost: float = 1.0
-    ):
-        # boost scales the term's impacts AND every upper bound the
-        # pruning reads (ub, block_ub) — WAND stays exact because the
-        # bounds scale linearly with the scores. Must be > 0: a
-        # non-positive boost breaks the bound monotonicity (use
-        # must_not for exclusion instead).
-        if boost <= 0.0:
-            raise ValueError(f"boost must be > 0, got {boost}")
-        self.term = term
-        self.boost = float(boost)
+
+class _Blocks:
+    """One term's blocks, over all its segments in doc order: the
+    doc range each block may cover (``lo``..``hi``), its boosted
+    upper bound, and the decode of the last block read (a block that
+    straddles a window edge is decoded once)."""
+
+    __slots__ = ("segs", "seg_of", "local", "lo", "hi", "ub", "n",
+                 "boost", "_last")
+
+    def __init__(self, segments: list[Segment], boost: float):
         self.segs = sorted(segments, key=lambda s: s.min_doc_id)
-        self.ub = self.boost * max(
-            float(s.block_max_impact.max()) for s in self.segs
+        self.boost = boost
+        self.hi = np.concatenate([s.block_max_doc for s in self.segs])
+        # a block starts after its predecessor's last doc
+        self.lo = np.concatenate([
+            np.concatenate(([s.min_doc_id], s.block_max_doc[:-1] + 1))
+            for s in self.segs
+        ])
+        self.ub = boost * np.concatenate(
+            [s.block_max_impact for s in self.segs]
         )
-        self.seg_i = 0
-        self.blk_i = 0
-        self.pos = 0
-        self._loaded: tuple[int, int] | None = None
-        self._cur_docs: np.ndarray | None = None
-        self._cur_imps: np.ndarray | None = None
-        self._load_block()
-
-    def _load_block(self) -> None:
-        if self.seg_i >= len(self.segs):
-            self._cur_docs = None
-            self._loaded = None
-            return
-        if self._loaded == (self.seg_i, self.blk_i):
-            return
-        self._cur_docs, self._cur_imps = self.segs[self.seg_i].decode_block(
-            self.blk_i
+        self.n = np.concatenate([s.block_n for s in self.segs])
+        self.seg_of = np.repeat(
+            np.arange(len(self.segs)), [s.n_blocks for s in self.segs]
         )
-        self._loaded = (self.seg_i, self.blk_i)
+        self.local = np.concatenate(
+            [np.arange(s.n_blocks) for s in self.segs]
+        )
+        self._last = (-1, None, None)
 
-    @property
-    def exhausted(self) -> bool:
-        return self._cur_docs is None
+    def read(self, blocks, lo: int, hi: int):
+        """Postings of the given blocks (ascending) with
+        lo <= doc_id <= hi → (doc_ids, boosted impacts)."""
+        docs, imps = [], []
+        for g in blocks:
+            if self._last[0] == g:
+                d, i = self._last[1], self._last[2]
+            else:
+                seg = self.segs[self.seg_of[g]]
+                d, i = seg.decode_block(int(self.local[g]))
+                self._last = (g, d, i)
+            docs.append(d)
+            imps.append(i)
+        docs = np.concatenate(docs)
+        imps = np.concatenate(imps)
+        i0 = int(np.searchsorted(docs, lo))
+        i1 = int(np.searchsorted(docs, hi, side="right"))
+        return docs[i0:i1], self.boost * imps[i0:i1]
 
-    def cur_doc(self) -> int:
-        if self._cur_docs is None:
-            return _INF
-        return int(self._cur_docs[self.pos])
 
-    def cur_impact(self) -> float:
-        return self.boost * float(self._cur_imps[self.pos])
-
-    def block_max_doc(self) -> int:
-        """Last doc_id of the current block (skip boundary)."""
-        if self._cur_docs is None:
-            return _INF
-        return int(self.segs[self.seg_i].block_max_doc[self.blk_i])
-
-    def block_ub(self, d: int) -> float:
-        """Max impact of the block that would contain the first
-        posting ≥ d (shallow move — no decode)."""
-        seg_i, blk_i = self.seg_i, self.blk_i
-        while seg_i < len(self.segs):
-            seg = self.segs[seg_i]
-            if d <= seg.max_doc_id:
-                if seg_i == self.seg_i:
-                    b = blk_i + int(
-                        np.searchsorted(seg.block_max_doc[blk_i:], d)
-                    )
-                else:
-                    b = int(np.searchsorted(seg.block_max_doc, d))
-                if b < seg.n_blocks:
-                    return self.boost * float(seg.block_max_impact[b])
-            seg_i += 1
-            blk_i = 0
-        return 0.0
-
-    def advance_to(self, d: int) -> None:
-        """Move to the first posting with doc_id ≥ d."""
-        while self.seg_i < len(self.segs):
-            seg = self.segs[self.seg_i]
-            if d > seg.max_doc_id:
-                self.seg_i += 1
-                self.blk_i = 0
-                self.pos = 0
-                continue
-            start_blk = self.blk_i if self._loaded and self._loaded[0] == self.seg_i else 0
-            b = start_blk + int(
-                np.searchsorted(seg.block_max_doc[start_blk:], d)
-            )
-            self.blk_i = b
-            self._load_block()
-            # block b has block_max_doc >= d, so the target is inside
-            self.pos = int(np.searchsorted(self._cur_docs, d))
-            return
-        self._cur_docs = None
-        self._loaded = None
-
-    def next(self) -> None:
-        self.pos += 1
-        if self._cur_docs is not None and self.pos >= len(self._cur_docs):
-            self.blk_i += 1
-            self.pos = 0
-            if self.blk_i >= self.segs[self.seg_i].n_blocks:
-                self.seg_i += 1
-                self.blk_i = 0
-            self._load_block()
+def _live_blocks(lists, spans, lo: int, hi: int, theta: float):
+    """Block-level refinement of a window that was not skipped. The
+    window splits at every block edge of its terms into intervals that
+    each term's blocks either cover whole or miss; an interval's bound
+    sums, in ascending term order, the covering blocks' bounds. Only
+    intervals bounded above θ can hold a new top-k doc → per span, the
+    blocks that cover such an interval."""
+    edges = [np.array([lo, hi + 1])]
+    for i, b0, b1 in spans:
+        b = lists[i]
+        edges.append(b.lo[b0:b1 + 1])
+        edges.append(b.hi[b0:b1 + 1] + 1)
+    starts = np.unique(np.clip(np.concatenate(edges), lo, hi + 1))[:-1]
+    bound = np.zeros(len(starts), dtype=np.float64)
+    covers = []
+    for i, b0, b1 in spans:
+        b = lists[i]
+        g = np.minimum(b0 + np.searchsorted(b.hi[b0:b1 + 1], starts), b1)
+        hit = (b.hi[g] >= starts) & (b.lo[g] <= starts)
+        bound += np.where(hit, b.ub[g], 0.0)
+        covers.append((g, hit))
+    live = bound > theta
+    return [np.unique(g[hit & live]) for g, hit in covers]
 
 
 def bmw_topk_local(
@@ -163,8 +149,30 @@ def bmw_topk_local(
     boosts: dict[str, float] | None = None,
     must: set | None = None,
 ) -> list[tuple[int, float]]:
-    """Pure-Python/numpy BMW over in-memory segments → top-k
-    [(doc_id, score)] sorted (score DESC, doc_id ASC).
+    """Exact window-at-a-time Block-Max top-k over in-memory segments
+    → [(doc_id, score)] sorted (score DESC, doc_id ASC).
+
+    Windows: the doc-id space is cut at block ends, one window per
+    ``WINDOW_POSTINGS`` postings of the query's lists, and windows are
+    visited in ascending doc order. A window's bound is the sum, over
+    terms in ascending order, of boost × the largest
+    ``block_max_impact`` among that term's blocks overlapping it. Once
+    the heap holds k docs, a window whose bound is ≤ θ (the k-th
+    score) is skipped without a decode; in any other window, blocks
+    whose doc ranges only hold intervals bounded ≤ θ are skipped too.
+    The other blocks decode (``Segment.decode_block``) and numpy
+    scores the window: per doc, 0.0 plus each matching term's boosted
+    impact in ascending term order, then a merge of the docs above θ
+    into the running top-k by ``lexsort((doc, -score))``.
+
+    Exact: a skipped doc scores ≤ its window's or interval's bound ≤ θ
+    (the bound adds per-term block maxima in the same order, impacts
+    are positive, and float addition and multiplication round
+    monotonically), and a doc that only ties θ loses the doc_id
+    tie-break to every heap doc, all of which come from earlier
+    (lower) windows. The ascending-term sum is the frozen
+    summation order, so scores are float-identical to the exhaustive
+    scorer (tests/test_bmw_property.py).
 
     ``exclude``: optional container of doc_ids to skip (Lucene's
     liveDocs check — tombstoned docs never enter the heap, so θ stays
@@ -172,103 +180,99 @@ def bmw_topk_local(
     result equals exhaustive-score-then-filter; plans/delete.py).
 
     ``boosts``: optional per-term score multipliers (> 0; Lucene's
-    ``term^2.5``). Bounds scale with the scores inside ``_Cursor``,
-    so the pruning stays exact; the frozen ascending-term summation
-    order is unchanged (boosted impacts sum in the same order).
+    ``term^2.5``), applied to impacts and block bounds alike, so the
+    pruning stays exact. A non-positive boost raises ``ValueError``:
+    it breaks the bound monotonicity (use must_not for exclusion).
 
     ``must``: optional set of REQUIRED terms (Lucene MUST clauses;
     each must also be a scoring key of ``segments_by_term``): a doc
-    enters the heap only when every must term matched it at full
-    evaluation. θ pruning stays conservative — it only ever rises on
-    admitted (qualifying) docs."""
+    qualifies only when every must term matched it; a must term with
+    no segments empties the result. θ only rises on qualifying docs."""
+    boosts = boosts or {}
+    for t, b in boosts.items():
+        if b <= 0.0:
+            raise ValueError(f"boost must be > 0, got {b} for term {t!r}")
     if k <= 0:
         return []
-    cursors = [
-        _Cursor(t, segs, (boosts or {}).get(t, 1.0))
-        for t, segs in segments_by_term.items()
-        if segs
+    terms = sorted(t for t, segs in segments_by_term.items() if segs)
+    must = frozenset(must or ())
+    if not terms or not must <= set(terms):
+        return []
+    lists = [
+        _Blocks(segments_by_term[t], float(boosts.get(t, 1.0)))
+        for t in terms
     ]
-    cursors = [c for c in cursors if not c.exhausted]
-    heap: list[tuple[float, int]] = []  # (score, -doc_id): min = worst
+    is_must = [t in must for t in terms]
+    excl = _id_array(exclude)
 
-    while cursors:
-        cursors.sort(key=lambda c: c.cur_doc())
-        theta = heap[0][0] if len(heap) >= k else float("-inf")
-        # --- pivot selection on GLOBAL term upper bounds
-        acc = 0.0
-        pivot_i = -1
-        for i, c in enumerate(cursors):
-            acc += c.ub
-            if acc > theta:
-                pivot_i = i
-                break
-        if pivot_i < 0:
-            break  # no remaining doc can beat θ
-        pivot_doc = cursors[pivot_i].cur_doc()
-        if pivot_doc == _INF:
-            break
-        # EXTEND the pivot over every cursor parked at pivot_doc
-        # (Ding & Suel §BMW): they all contribute to the doc's upper
-        # bound — without this, the block-max check undercounts and
-        # skips multi-term docs (caught by the sf0.01 oracle gate).
-        while (
-            pivot_i + 1 < len(cursors)
-            and cursors[pivot_i + 1].cur_doc() == pivot_doc
-        ):
-            pivot_i += 1
+    # window edges: a cut at the block end where the running postings
+    # count (all terms, in block-end order) passes each multiple of
+    # WINDOW_POSTINGS; windows are [lo_w, hi_w], inclusive
+    ends = np.concatenate([b.hi for b in lists])
+    order = np.argsort(ends, kind="stable")
+    ends = ends[order]
+    cum = np.cumsum(np.concatenate([b.n for b in lists])[order])
+    cuts = np.searchsorted(cum, np.arange(WINDOW_POSTINGS, cum[-1],
+                                          WINDOW_POSTINGS))
+    hi_w = np.unique(np.append(ends[cuts], ends[-1]))
+    lo_w = np.empty_like(hi_w)
+    lo_w[0] = min(int(b.lo[0]) for b in lists)
+    lo_w[1:] = hi_w[:-1] + 1
+    # per term, the blocks overlapping each window: first..last
+    first = [np.searchsorted(b.hi, lo_w) for b in lists]
+    last = [np.searchsorted(b.lo, hi_w, side="right") - 1 for b in lists]
 
-        if cursors[0].cur_doc() == pivot_doc:
-            # --- block-max refinement (shallow, no decode)
-            block_acc = sum(
-                c.block_ub(pivot_doc) for c in cursors[: pivot_i + 1]
-            )
-            if block_acc <= theta and len(heap) >= k:
-                # skip to just past the nearest block boundary — but
-                # never past the next cursor's current doc: docs in
-                # the skipped range may live in cursors BEYOND the
-                # pivot, whose upper bounds block_acc did not count
-                # (Ding & Suel: d' = min(block boundaries, next
-                # cursor's docID)).
-                d_next = (
-                    min(c.block_max_doc() for c in cursors[: pivot_i + 1]) + 1
-                )
-                if pivot_i + 1 < len(cursors):
-                    d_next = min(d_next, cursors[pivot_i + 1].cur_doc())
-                cursors[0].advance_to(max(d_next, pivot_doc + 1))
-            else:
-                # --- full evaluation, ascending-term summation order
-                # (tombstoned docs: advance every cursor past the doc
-                # but never score it — the liveDocs skip)
-                dead = exclude is not None and pivot_doc in exclude
-                parts = []
-                for c in cursors:
-                    if c.cur_doc() > pivot_doc:
-                        break
-                    c.advance_to(pivot_doc)
-                    if not dead and c.cur_doc() == pivot_doc:
-                        parts.append((c.term, c.cur_impact()))
-                qualified = not dead and (
-                    must is None
-                    or must <= {t for t, _ in parts}
-                )
-                if qualified:
-                    score = 0.0
-                    for _, imp in sorted(parts):
-                        score += imp
-                    if len(heap) < k:
-                        heapq.heappush(heap, (score, -pivot_doc))
-                    elif score > heap[0][0]:
-                        heapq.heapreplace(heap, (score, -pivot_doc))
-                for c in cursors:
-                    if c.cur_doc() == pivot_doc:
-                        c.next()
+    top_d = np.zeros(0, dtype=np.int64)
+    top_s = np.zeros(0, dtype=np.float64)
+    theta = None  # k-th score once the heap is full
+    for w in range(len(hi_w)):
+        spans = [
+            (i, int(first[i][w]), int(last[i][w]))
+            for i in range(len(lists))
+            if first[i][w] <= last[i][w]
+        ]
+        lo, hi = int(lo_w[w]), int(hi_w[w])
+        if theta is None:
+            blocks = [range(b0, b1 + 1) for _, b0, b1 in spans]
         else:
-            cursors[0].advance_to(pivot_doc)
-        cursors = [c for c in cursors if not c.exhausted]
-
-    out = [(-nd, s) for s, nd in heap]
-    out.sort(key=lambda x: (-x[1], x[0]))
-    return [(d, s) for d, s in out]
+            bound = 0.0
+            for i, b0, b1 in spans:
+                bound += float(lists[i].ub[b0:b1 + 1].max())
+            if bound <= theta:
+                continue
+            blocks = _live_blocks(lists, spans, lo, hi, theta)
+        parts = [
+            (i, *lists[i].read(blk, lo, hi))
+            for (i, _, _), blk in zip(spans, blocks)
+            if len(blk)
+        ]
+        if not parts:
+            continue
+        docs = np.unique(np.concatenate([d for _, d, _ in parts]))
+        score = np.zeros(len(docs), dtype=np.float64)
+        matched = np.zeros(len(docs), dtype=np.int64)
+        for i, d, imp in parts:  # ascending term order
+            pos = np.searchsorted(docs, d)
+            score[pos] += imp
+            if is_must[i]:
+                matched[pos] += 1
+        keep = matched == len(must)
+        if excl is not None:
+            keep &= ~_in_sorted(docs, excl)
+        if theta is not None:
+            # also drops the docs of intervals _live_blocks left out:
+            # their sums are partial, and (impacts are positive) at
+            # most their full scores, which are at most θ
+            keep &= score > theta
+        if not keep.any():
+            continue
+        cand_d = np.concatenate([top_d, docs[keep]])
+        cand_s = np.concatenate([top_s, score[keep]])
+        sel = np.lexsort((cand_d, -cand_s))[:k]
+        top_d, top_s = cand_d[sel], cand_s[sel]
+        if len(top_d) == k:
+            theta = float(top_s[-1])
+    return list(zip(top_d.tolist(), top_s.tolist()))
 
 
 # --------------------------------------------------------- Spark layer
@@ -301,7 +305,7 @@ def _attach_query_ids(
     createDataFrame round-trip, where the old broadcast-join route
     paid a driver→JVM table ship plus a BroadcastExchange job per
     call — measured ~350 ms of the ~740 ms single-query latency
-    (tools/profile_query_r6.py). Row-identical to the join: both emit
+    (OPTIMIZATION_r06.md). Row-identical to the join: both emit
     one row per (matching segment, subscribed query)."""
     pairs = [(qid, t) for qid, ts in terms_by_query.items() for t in ts]
     if len(pairs) > _LITMAP_MAX_PAIRS:
@@ -391,7 +395,7 @@ def bmw_topk(
             F.col("bucket").isin(buckets) & F.col("term").isin(all_terms)
         )
 
-    # NOTE (round-6 A/B, tools/profile_query_r6.py): an adaptive
+    # NOTE (round-6 A/B, OPTIMIZATION_r06.md): an adaptive
     # "collect-and-score-on-the-driver" route for small queries was
     # measured SLOWER than this distributed plan (~430 ms vs ~250 ms
     # per query at 20k docs): the size-guard aggregate job plus the
@@ -405,13 +409,44 @@ def bmw_topk(
     # bmw_serve / bmw_serve_arrow explicitly — those carry the
     # max_collect_postings cap as their contract.
     joined = _attach_query_ids(seg_rows, terms_by_query, spark)
+    return _score_groups(joined, k, band_size, exclude_ids)
+
+
+def _segments_by_term(rows) -> dict[str, list[Segment]]:
+    """{term: [Segment]} from stored segment rows (dicts)."""
+    by_term: dict[str, list[Segment]] = {}
+    for r in rows:
+        by_term.setdefault(r["term"], []).append(row_to_segment(r))
+    return by_term
+
+
+def _group_scorer(k: int, exclude_ids=None, must_by_q=None):
+    """The per-group body every Spark lane runs: one query's (or one
+    query band's) segment rows → its top-k rows. Rows carrying a
+    ``neg`` flag are must_not terms (their docs join the exclusion
+    set); a ``boost`` column gives the per-term boosts."""
+    base = _id_array(exclude_ids)
 
     def run(pdf: pd.DataFrame) -> pd.DataFrame:
         qid = int(pdf["query_id"].iloc[0])
-        by_term: dict[str, list[Segment]] = {}
-        for _, row in pdf.iterrows():
-            by_term.setdefault(row["term"], []).append(row_to_segment(row))
-        top = bmw_topk_local(by_term, k, exclude=exclude_ids)
+        rows = pdf.to_dict("records")
+        excl = [base] if base is not None else []
+        if "neg" in pdf.columns:
+            excl += [
+                row_to_segment(r).decode_all()[0] for r in rows if r["neg"]
+            ]
+            rows = [r for r in rows if not r["neg"]]
+        boosts = (
+            {r["term"]: float(r["boost"]) for r in rows}
+            if "boost" in pdf.columns
+            else None
+        )
+        top = bmw_topk_local(
+            _segments_by_term(rows), k,
+            exclude=np.concatenate(excl) if excl else None,
+            boosts=boosts,
+            must=(must_by_q or {}).get(qid) or None,
+        )
         return pd.DataFrame(
             {
                 "query_id": qid,
@@ -421,38 +456,29 @@ def bmw_topk(
             }
         )
 
+    return run
+
+
+def _score_groups(
+    joined: DataFrame,
+    k: int,
+    band_size: int | None,
+    exclude_ids=None,
+    must_by_q=None,
+) -> DataFrame:
+    """Score each query's segment rows (``_group_scorer``), per query
+    or per (query, doc band) when ``band_size`` is given, and merge
+    the bands' top-k rows."""
+    run = _group_scorer(k, exclude_ids, must_by_q)
     if band_size is None:
         return joined.groupBy("query_id").applyInPandas(run, BMW_RESULT_SCHEMA)
-    return _banded(joined, k, band_size, exclude_ids)
-
-
-def _banded(
-    joined: DataFrame, k: int, band_size: int, exclude_ids=None
-) -> DataFrame:
-    import pandas as pd  # local alias for closure clarity
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        qid = int(pdf["query_id"].iloc[0])
-        by_term: dict[str, list[Segment]] = {}
-        for _, row in pdf.iterrows():
-            by_term.setdefault(row["term"], []).append(row_to_segment(row))
-        top = bmw_topk_local(by_term, k, exclude=exclude_ids)
-        return pd.DataFrame(
-            {
-                "query_id": qid,
-                "doc_id": [d for d, _ in top],
-                "score": [s for _, s in top],
-                "rank": np.arange(1, len(top) + 1, dtype=np.int32),
-            }
-        )
-
     from pyspark.sql.window import Window
 
     banded = joined.withColumn(
         "doc_band", F.floor(F.col("min_doc_id") / F.lit(band_size))
     )
     per_band = banded.groupBy("query_id", "doc_band").applyInPandas(
-        lambda pdf: run(pdf), BMW_RESULT_SCHEMA
+        run, BMW_RESULT_SCHEMA
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
     return (
@@ -532,7 +558,7 @@ def bmw_topk_boolean(
     pushdown), broadcast (query_id, term, boost, neg) join,
     per-query applyInPandas. Inside the scorer the negative terms'
     postings decode into a liveDocs-style exclusion set (merged with
-    the tombstones), and boosts scale cursor impacts and bounds —
+    the tombstones), and boosts scale impacts and block bounds —
     pruning stays exact. Banded mode is safe because segments never
     cross band boundaries: a negative term's postings for band B sit
     in band B's group, so each band's exclusion set is complete.
@@ -625,51 +651,7 @@ def bmw_topk_boolean(
                 "where each band's exclusion set is bounded"
             )
 
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        qid = int(pdf["query_id"].iloc[0])
-        excl = set(int(d) for d in exclude_ids) if exclude_ids else set()
-        by_term: dict[str, list[Segment]] = {}
-        boosts: dict[str, float] = {}
-        for _, row in pdf.iterrows():
-            seg = row_to_segment(row)
-            if row["neg"]:
-                docs, _, _ = seg.decode_all()
-                excl.update(int(d) for d in docs)
-            else:
-                by_term.setdefault(row["term"], []).append(seg)
-                boosts[row["term"]] = float(row["boost"])
-        top = bmw_topk_local(
-            by_term, k, exclude=excl or None, boosts=boosts,
-            must=must_by_q.get(qid) or None,
-        )
-        return pd.DataFrame(
-            {
-                "query_id": qid,
-                "doc_id": [d for d, _ in top],
-                "score": [s for _, s in top],
-                "rank": np.arange(1, len(top) + 1, dtype=np.int32),
-            }
-        )
-
-    if band_size is None:
-        return joined.groupBy("query_id").applyInPandas(run, BMW_RESULT_SCHEMA)
-
-    from pyspark.sql.window import Window
-
-    banded = joined.withColumn(
-        "doc_band", F.floor(F.col("min_doc_id") / F.lit(band_size))
-    )
-    per_band = banded.groupBy("query_id", "doc_band").applyInPandas(
-        run, BMW_RESULT_SCHEMA
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("score"), F.asc("doc_id")
-    )
-    return (
-        per_band.drop("rank")
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return _score_groups(joined, k, band_size, exclude_ids, must_by_q)
 
 
 def score_threshold_all(
@@ -729,14 +711,13 @@ def score_threshold_all(
     def decode(batches):
         for pdf in batches:
             out = []
-            for _, row in pdf.iterrows():
-                seg = row_to_segment(row)
-                doc_ids, _, imps = seg.decode_all()
+            for r in pdf.to_dict("records"):
+                doc_ids, _, imps = row_to_segment(r).decode_all()
                 out.append(
                     pd.DataFrame(
                         {
-                            "query_id": row["query_id"],
-                            "term": row["term"],
+                            "query_id": r["query_id"],
+                            "term": r["term"],
                             "doc_id": doc_ids,
                             "impact": imps,
                         }
@@ -798,16 +779,25 @@ def bmw_serve_arrow(
     tbl = dataset.to_table(
         filter=ds.field("bucket").isin(buckets) & ds.field("term").isin(terms)
     )
-    total = sum(tbl.column("n_postings").to_pylist())
+    return _serve_table(tbl, k, max_collect_postings, exclude_ids)
+
+
+def _serve_table(
+    tbl, k: int, max_collect_postings: int, exclude_ids
+) -> list[tuple[int, float]]:
+    """The driver-local tail of both serve lanes: the query's segment
+    rows as an Arrow table → postings cap check → top-k."""
+    import pyarrow.compute as pc
+
+    total = pc.sum(tbl.column("n_postings")).as_py() or 0
     if total > max_collect_postings:
         raise ValueError(
             f"query matches {total} postings > {max_collect_postings}; "
             "use the distributed bmw_topk path"
         )
-    by_term: dict[str, list[Segment]] = {}
-    for row in tbl.to_pylist():
-        by_term.setdefault(row["term"], []).append(row_to_segment(row))
-    return bmw_topk_local(by_term, k, exclude=exclude_ids)
+    return bmw_topk_local(
+        _segments_by_term(tbl.to_pylist()), k, exclude=exclude_ids
+    )
 
 
 def bmw_serve(
@@ -834,21 +824,8 @@ def bmw_serve(
     # toArrow() collect: the segment rows are mostly binary blobs, and
     # the Arrow path moves them as columnar buffers where Row collect
     # deserializes each through pickled Rows — measured p50 107 → 89 ms
-    # at 20k docs, identical results (tools/profile_serve_r6.py).
-    rows = (
-        postings.filter(
-            F.col("bucket").isin(buckets) & F.col("term").isin(terms)
-        )
-        .toArrow()
-        .to_pylist()
-    )
-    total = sum(r["n_postings"] for r in rows)
-    if total > max_collect_postings:
-        raise ValueError(
-            f"query matches {total} postings > {max_collect_postings}; "
-            "use the distributed bmw_topk path"
-        )
-    by_term: dict[str, list[Segment]] = {}
-    for r in rows:
-        by_term.setdefault(r["term"], []).append(row_to_segment(r))
-    return bmw_topk_local(by_term, k, exclude=exclude_ids)
+    # at 20k docs, identical results (OPTIMIZATION_r06.md).
+    tbl = postings.filter(
+        F.col("bucket").isin(buckets) & F.col("term").isin(terms)
+    ).toArrow()
+    return _serve_table(tbl, k, max_collect_postings, exclude_ids)

@@ -5,6 +5,7 @@ driver-side python replica that reuses the OracleIndex impacts."""
 
 from __future__ import annotations
 
+import numpy as np
 import pytest
 
 from documentindex_spark import oracle
@@ -14,6 +15,7 @@ from documentindex_spark.operators.bmw import (
     bmw_topk_boolean,
     parse_boolean_query,
 )
+from documentindex_spark.operators.codec import encode_segment
 
 
 @pytest.fixture(scope="module")
@@ -203,10 +205,12 @@ def test_composes_with_tombstones(engine, local_docs):
 def test_boost_must_be_positive():
     import pytest as _pt
 
-    from documentindex_spark.operators.bmw import _Cursor
+    from documentindex_spark.operators.bmw import bmw_topk_local
 
+    segs = {"t": [encode_segment("t", 1, np.array([0]), np.array([1]),
+                                 np.array([1.0]))]}
     with _pt.raises(ValueError, match="boost"):
-        _Cursor("t", [], boost=0.0)
+        bmw_topk_local(segs, 10, boosts={"t": 0.0})
 
 
 def test_batched_queries(engine, local_docs):
